@@ -249,8 +249,7 @@ object SparkEntry {
           array_distinct(split(DedupOps.normText(col("text")), " ")).as("ta"))
       d.alias("x").join(d.alias("y"), col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-          round(size(array_intersect(col("x.ta"), col("y.ta"))).cast("double") /
-            size(array_union(col("x.ta"), col("y.ta"))).cast("double"), 6).as("jac"))
+          DedupOps.shingleJaccardFromArrays(col("x.ta"), col("y.ta")).as("jac"))
         .filter(col("jac") >= 0.5)
     }),
 

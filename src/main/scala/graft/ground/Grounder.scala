@@ -87,22 +87,6 @@ final class Grounder private (
     }
   }
 
-  /**
-   * Allocation-lean kernel for the triple path: per turn, resolve span top-1
-   * and per-turn concept dedup in one scan, emitting canonical CURIEs into
-   * `out`. No Mention objects, no tuples — this is the 100 TB hot loop.
-   */
-  def collectTurnConcepts(text: String, out: java.util.ArrayList[String],
-                          seen: java.util.HashSet[String]): Unit = {
-    if (text == null || text.isEmpty) return
-    out.clear(); seen.clear()
-    val norm = AhoCorasick.normalize(text)
-    automaton.findAllInto(norm, (_, _, pid) => {
-      val curie = conceptCuries(pidConcept(pid))
-      if (seen.add(curie)) out.add(curie)
-    })
-  }
-
   // ----- precomputed hot-loop tables ---------------------------------------
   // The fused triple kernel never consults surfaces/case bonuses (the
   // predicate-weight argmax depends on the pattern alone), so the span top-1
@@ -294,14 +278,6 @@ object MentionDetector {
   }
 
   /**
-   * Detection with span-local top-1 fused into the scan (see
-   * [[Grounder.findTopMentions]]): same result as detect → topCandidates but
-   * with no ranking-window shuffle — the preferred path at corpus scale.
-   */
-  def detectTop(turns: Dataset[Turn], grounder: Broadcast[Grounder]): Dataset[Mention] =
-    detectTopSlim(slim(turns.toDF()), grounder)
-
-  /**
    * Sharded-lexicon detection: one pass per shard automaton, results
    * unioned — exact vs the single-automaton result (see
    * [[Grounder.buildSharded]]). The trade is explicit: N corpus scans buy an
@@ -314,7 +290,14 @@ object MentionDetector {
     grounders.map(g => detectTopSlim(turns, g)).reduce(_ union _)
   }
 
-  /** Preferred scale path: slim projection in, fused top-1 out. */
+  /**
+   * Span-level detection with top-1 fused into the scan (see
+   * [[Grounder.findTopMentions]]): same result as detect → topCandidates but
+   * with no ranking-window shuffle. The pipeline's triples come from
+   * [[detectTriples]]; this is the API for callers that need spans. With
+   * `metrics`, `mentions_emitted` counts SPANS here, not the pipeline's
+   * distinct concepts per turn (see [[graft.pipeline.RunMetrics]]).
+   */
   def detectTopSlim(turns: Dataset[SlimTurn], grounder: Broadcast[Grounder],
                     metrics: Option[graft.pipeline.RunMetrics] = None): Dataset[Mention] = {
     val spark = turns.sparkSession
@@ -341,25 +324,20 @@ object MentionDetector {
   }
 
   /**
-   * THE scale path: detection → span top-1 → per-turn concept dedup, fused
-   * into one map-side pass emitting final `Triple`s directly.
+   * THE detection kernel behind every pipeline run: detection → span top-1 →
+   * per-turn concept dedup, fused into one map-side pass emitting final
+   * triples, as a first-class Catalyst operator
+   * ([[graft.plans.DetectTriplesNode]]): the byte-scan kernel sits inside the
+   * single query plan, the corpus exchange below it stays visible to the
+   * optimizer, and subj/pred render in whole-stage codegen above it.
    *
    * Zero-shuffle dedup argument: triple subj embeds (conv_id, turn_idx), so
    * duplicates of a (turn, concept) pair can only originate from the same
-   * turn — which lives in exactly one partition. A per-turn HashSet therefore
-   * yields GLOBALLY distinct mention triples with no exchange; with entries
-   * born canonical (Grounder.build canonical map) nothing downstream needs a
-   * second pass. Total corpus-wide shuffles in the whole pipeline: one (the
-   * conversation-preserving repartition).
-   */
-  /** Narrow scan output: subj/pred are rendered in codegen downstream. */
-  final case class TurnConcept(conv_id: String, turn_idx: Int, obj: String)
-
-  /**
-   * THE scale path, as a first-class Catalyst operator
-   * ([[graft.plans.DetectTriplesNode]]): the fused byte-scan kernel sits
-   * inside the single query plan, the corpus exchange below it stays visible
-   * to the optimizer, and subj/pred render in whole-stage codegen above it.
+   * turn — which lives in exactly one partition. A per-turn flag array
+   * therefore yields GLOBALLY distinct mention triples with no exchange; with
+   * entries born canonical (Grounder.build canonical map) nothing downstream
+   * needs a second pass. Total corpus-wide shuffles in the whole pipeline:
+   * one (the conversation-preserving repartition).
    */
   def detectTriples(turns: Dataset[SlimTurn], grounder: Broadcast[Grounder],
                     metrics: Option[graft.pipeline.RunMetrics] = None): org.apache.spark.sql.DataFrame = {

@@ -34,7 +34,7 @@ object Closure {
     * agree on every code point below U+10000 but disagree when supplementary
     * characters meet [U+E000, U+FFFF] — so the driver branches compare the
     * SAME way Spark does, not the Java default. */
-  private[operators] def utf8Lt(a: String, b: String): Boolean = {
+  private[graft] def utf8Lt(a: String, b: String): Boolean = {
     val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val n = math.min(x.length, y.length)

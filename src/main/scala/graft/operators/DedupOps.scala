@@ -86,14 +86,6 @@ object DedupOps {
   def shingleHashes(text: Column, n: Int = 3): Column =
     transform(shingles(text, n), s => xxhash64(s))
 
-  /** documents → (doc_id, sig) with each stage in its own projection. */
-  def minhashSignatures(documents: DataFrame, k: Int = 16): DataFrame =
-    documents
-      .select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
-      .select(col("doc_id"), shinglesFromTokens(col("toks")).as("shingle_arr"))
-      .select(col("doc_id"), transform(col("shingle_arr"), s => xxhash64(s)).as("sh"))
-      .select(col("doc_id"), minhashSignature(col("sh"), k).as("sig"))
-
   /**
    * Banded minhash signatures: documents → (doc_id, band_idx, band_hash),
    * `bands` narrow rows per doc. This IS the persistable signature-store
@@ -228,10 +220,6 @@ object DedupOps {
     documents
       .select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
       .select(col("doc_id"), shinglesFromTokens(col("toks"), n).as("sh"))
-
-  /** Convenience text-to-text form — ONLY for tiny inputs/tests (HOF rule). */
-  def shingleJaccard(textA: Column, textB: Column, n: Int = 3): Column =
-    shingleJaccardFromArrays(shingles(textA, n), shingles(textB, n))
 
   /**
    * Full near-dup pipeline: LSH candidates → exact SHINGLE-Jaccard verify ≥

@@ -64,10 +64,11 @@ object Demo {
     // so the mentions_reusable flag genuinely exercises the tag-preservation
     // contract (keepLast=1 alone would also keep it today; the tag is the
     // load-bearing guard once more snapshots exist)
-    ic.expireSnapshots("mentions_top", keepLast = 1, keepTags = Seq("run/mentions"))
+    val mentionsTag = KgPipeline.mentionsTag("run")
+    ic.expireSnapshots("mentions_top", keepLast = 1, keepTags = Seq(mentionsTag))
     println(s"VACUUM ${expired.map { case (t, ids) => s"$t=${ids.size}" }.mkString(" ")} " +
       s"current=${ic.currentSnapshotId("kg_edges").getOrElse(-1L)} " +
-      s"mentions_reusable=${ic.findByTag("mentions_top", "run/mentions").isDefined}")
+      s"mentions_reusable=${ic.findByTag("mentions_top", mentionsTag).isDefined}")
     steadyState(spark)
     spark.stop()
   }

@@ -15,12 +15,15 @@ import graft.sources.OboGraphReader
  * End-to-end KG-construction pipeline (BASELINE.json north_star):
  *
  *   read transcripts → conversation-boundary-preserving repartition (hash on
- *   salted conv_id) → sortWithinPartitions(conv_id, turn_idx) →
- *   mapPartitions trie mention detection [G4] → candidate scoring + top-1
- *   window [F5] → CURIE canonicalization [F1-F4, native expressions] →
- *   xref-based entity merge [J3] → groupBy-dedup [A2] → (subj, pred, obj)
- *   edge + node tables with per-partition lineage metrics [S9/S10/A4],
- *   checkpoint-resumable per icelite snapshot.
+ *   salted conv_id) → sortWithinPartitions(conv_id, turn_idx) → ONE fused
+ *   detection kernel, [[MentionDetector.detectTriples]]: Aho-Corasick scan
+ *   [G4] + span top-1 [F5] + per-turn concept dedup, emitting canonical
+ *   CURIEs (xref entity merge [J3] is folded into the grounder's entries) →
+ *   union with the canonicalized ontology edges [F1-F4, A2] → (subj, pred,
+ *   obj) edge + node tables with per-partition lineage metrics [S9/S10/A4],
+ *   checkpoint-resumable per icelite snapshot. Both run modes (with and
+ *   without an icelite root) call the same kernel, so they emit the same
+ *   `kg_edges` set and the same [[RunMetrics]] counts.
  *
  * Scale design (100 TB corpus, ontology side always ≪):
  *  - the ontology/lexicon/grounder path never shuffles the corpus: grounder
@@ -39,12 +42,17 @@ object KgPipeline {
   final case class Result(
       triples: DataFrame,
       nodes: DataFrame,
-      mentionsTopK: DataFrame,
       snapshotId: Option[Long],
       metrics: RunMetrics)
 
   /** Salt width for conversation partitioning (SURVEY J4). */
   val SaltBuckets = 8
+
+  /** Icelite resume tag of a run's materialized mention triples (table
+    * `mentions_top`). A snapshot is reused only under this tag, so a
+    * snapshot of another layout stored under an older tag is recomputed,
+    * never read as triples. */
+  def mentionsTag(runTag: String): String = s"$runTag/mention_triples"
 
   def standardizeOntology(spark: SparkSession, ontologyJsonPath: String, converter: Converter,
                           prefix: Option[String] = None): (DataFrame, DataFrame) =
@@ -61,49 +69,35 @@ object KgPipeline {
     (nodes, edges)
   }
 
-  /**
-   * Xref-based entity merge (J3): build undirected (curie, xref) links from
-   * node metadata, run connected components, return `curie → canonical` as a
-   * driver map suitable for broadcast (ontology-sized by construction).
-   */
-  /** Above this edge count, xref CC runs distributed; below, driver union-find. */
-  val DriverUnionFindLimit = 200000L
-
-  def xrefCanonicalMap(nodes: DataFrame, preferPrefix: Option[String] = None,
-                       extraEdges: Option[DataFrame] = None): Map[String, String] = {
+  /** Undirected (curie, xref) links from node metadata, plus `extraEdges`. */
+  private def xrefEdges(nodes: DataFrame, extraEdges: Option[DataFrame]): DataFrame = {
     val nodeXrefs = nodes
       .select(col("curie").as("a"), explode(col("xrefs")).as("b"))
       .filter(col("b").isNotNull)
-    val xrefEdges = extraEdges.fold(nodeXrefs)(e => nodeXrefs.unionByName(e))
+    extraEdges.fold(nodeXrefs)(e => nodeXrefs.unionByName(e))
+  }
 
-    // Ontology xref graphs are tiny relative to the corpus; SURVEY J3's
-    // driver union-find + broadcast map is both exact and ~20× cheaper in
-    // job-scheduling overhead than the iterative join loop. The distributed
-    // path stays for genuinely large entity graphs.
-    val probe = xrefEdges.limit(DriverUnionFindLimit.toInt + 1).collect()
-    val pairs: Array[(String, String)] =
-      if (probe.length <= DriverUnionFindLimit) {
-        // lexicographic-min root: the SAME canonical-label convention as the
-        // distributed branch (Closure.connectedComponents' min-CURIE roots),
-        // so the component labels cannot depend on collect/partition order or
-        // on which side of the cost switch a given graph lands
-        graft.operators.DriverUnionFind.components(
-          probe.iterator.map(r => (r.getString(0), r.getString(1))))(
-          (x, y) => if (x <= y) x else y).toArray
-      } else {
-        Closure.connectedComponents(xrefEdges)
-          .collect().map(r => (r.getString(0), r.getString(1)))
-      }
-
+  /**
+   * Xref-based entity merge (J3): connected components over the xref links
+   * ([[Closure.connectedComponents]] owns the driver/distributed cost
+   * switch), returned as a `curie → canonical` driver map suitable for
+   * broadcast (ontology-sized by construction).
+   */
+  def xrefCanonicalMap(nodes: DataFrame, preferPrefix: Option[String] = None,
+                       extraEdges: Option[DataFrame] = None): Map[String, String] = {
+    val pairs = Closure.connectedComponents(xrefEdges(nodes, extraEdges))
+      .collect().map(r => (r.getString(0), r.getString(1)))
     // representative per component: prefer the ontology's own prefix (so the
     // merged entity keeps its PATO id, not a lexicographically-smaller
-    // foreign xref), then min CURIE for determinism.
-    def rank(c: String): (Int, String) =
-      (if (preferPrefix.exists(p => c.startsWith(p + ":"))) 0 else 1, c)
+    // foreign xref), then min CURIE in Spark's UTF-8 byte order — the rule
+    // xrefCanonicalTable's min(struct) applies
+    def owned(c: String): Boolean = preferPrefix.exists(p => c.startsWith(p + ":"))
+    def before(x: String, y: String): Boolean =
+      if (owned(x) != owned(y)) owned(x) else Closure.utf8Lt(x, y)
     pairs.groupBy(_._2).iterator.flatMap { case (_, grp) =>
-      val memberSet = grp.map(_._1)
-      val rep = memberSet.minBy(rank)
-      memberSet.filter(_ != rep).map(_ -> rep)
+      val members = grp.map(_._1)
+      val rep = members.reduce((x, y) => if (before(y, x)) y else x)
+      members.filter(_ != rep).map(_ -> rep)
     }.toMap
   }
 
@@ -121,14 +115,10 @@ object KgPipeline {
    */
   def xrefCanonicalTable(nodes: DataFrame, preferPrefix: Option[String] = None,
                          extraEdges: Option[DataFrame] = None): DataFrame = {
-    val nodeXrefs = nodes
-      .select(col("curie").as("a"), explode(col("xrefs")).as("b"))
-      .filter(col("b").isNotNull)
-    val xrefEdges = extraEdges.fold(nodeXrefs)(e => nodeXrefs.unionByName(e))
-    val cc = Closure.connectedComponents(xrefEdges)
+    val cc = Closure.connectedComponents(xrefEdges(nodes, extraEdges))
     // representative = min (prefix-rank, curie) struct per component — struct
     // ordering is field-lexicographic, so this is exactly the driver path's
-    // minBy(rank)
+    // (owned, UTF-8 min) rule
     val rank = preferPrefix match {
       case Some(p) => when(col("curie").startsWith(p + ":"), 0).otherwise(1)
       case None    => lit(0)
@@ -184,11 +174,6 @@ object KgPipeline {
   }
 
   /**
-   * Full run over a transcripts DataFrame. When `icelite` is given, every
-   * expensive stage materializes as a tagged snapshot → kill-and-resume
-   * reuses finished stages and produces identical output (north rule).
-   */
-  /**
    * Ontology-side artifacts, built ONCE per ontology release and reused
    * across every corpus batch/snapshot (at 10^12 turns, ontology prep is
    * amortized to zero — rebuilding the broadcast automaton per batch would
@@ -230,6 +215,11 @@ object KgPipeline {
     OntologyContext(nodes, edges, grounder, canonical)
   }
 
+  /**
+   * Full run over a transcripts DataFrame. When `icelite` is given, every
+   * expensive stage materializes as a tagged snapshot → kill-and-resume
+   * reuses finished stages and produces identical output (north rule).
+   */
   def run(spark: SparkSession,
           transcripts: DataFrame,
           ontologyJsonPath: String,
@@ -274,15 +264,12 @@ object KgPipeline {
         .sortWithinPartitions(col("conv_id"), col("turn_idx"))
         .drop("salt")
 
-    // span-local top-1 fused into the detection scan (no ranking-window
-    // shuffle; equivalence with detect→topCandidates is unit-tested).
+    // ONE detection kernel in both modes (span top-1 + per-turn concept
+    // dedup; grounder entries are born canonical, so no remap follows).
     // Column pruning pushes the slim projection below the repartition, so
     // only (conv_id, turn_idx, text) ever shuffles.
-    val slimTurns = MentionDetector.slim(turns)
-    // accumulators attach to whichever detection pass actually runs per mode
-    // (icelite → the materialized top-mention snapshot; else the fused scan)
-    val top = MentionDetector.detectTopSlim(slimTurns, grounder,
-      if (icelite.isDefined) Some(metrics) else None).toDF()
+    val mentionTriples =
+      MentionDetector.detectTriples(MentionDetector.slim(turns), grounder, Some(metrics))
 
     // ontology edges: canonicalize + distinct (tiny)
     val ontologyTriples = canonicalize(edges.select("subj", "pred", "obj"), canonical)
@@ -290,20 +277,15 @@ object KgPipeline {
 
     val allTriples = icelite match {
       case Some(ic) =>
-        // resumable path: mentions materialize as a tagged snapshot first;
-        // read-back loses partitioning, so dedup pays one explicit shuffle
-        val topSnap = ic.materialize(spark, "mentions_top", s"$runTag/mentions")(top)
-        // dedup ONCE, after canonicalize+union — mentionTriples' own dedup
-        // would be a second corpus-sized exchange for the same final set
-        canonicalize(MentionDetector.mentionTriples(topSnap, dedup = false), canonical)
+        // resumable path: mention triples materialize as a tagged snapshot
+        // first; read-back loses partitioning, so the final dedup pays one
+        // explicit shuffle
+        ic.materialize(spark, "mentions_top", mentionsTag(runTag))(mentionTriples)
           .unionByName(ontologyTriples)
           .dropDuplicates("subj", "pred", "obj")
       case None =>
-        // scale path: detection + top-1 + per-turn dedup + canonicalization
-        // fused into ONE map-side pass (see MentionDetector.detectTriples);
         // the only corpus-wide shuffle in the whole plan is the repartition
-        MentionDetector.detectTriples(slimTurns, grounder, Some(metrics))
-          .unionByName(ontologyTriples)
+        mentionTriples.unionByName(ontologyTriples)
     }
 
     val nodeTable = nodes.select(
@@ -317,11 +299,6 @@ object KgPipeline {
       id
     }
 
-    Result(allTriples, nodeTable, top, snapId, metrics)
+    Result(allTriples, nodeTable, snapId, metrics)
   }
-
-  /** Pipeline without icelite materialization — pure DataFrame (for bench/verify). */
-  def triples(spark: SparkSession, transcripts: DataFrame,
-              ontologyJsonPath: String): DataFrame =
-    run(spark, transcripts, ontologyJsonPath).triples
 }

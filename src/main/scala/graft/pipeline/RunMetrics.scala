@@ -11,6 +11,13 @@ import org.apache.spark.util.LongAccumulator
  * triple-count metrics): every lenient skip in the reference becomes an
  * accumulator bump here, flushed to a JSON file next to the outputs. Spark
  * accumulators aggregate across all executors with no extra job.
+ *
+ * The detection counters are bumped by the one pipeline kernel
+ * ([[graft.ground.MentionDetector.detectTriples]]) in both run modes:
+ * `turns_processed` counts scanned turns, `empty_turns` the turns with no
+ * match, and `mentions_emitted` the DISTINCT concepts per turn (one per
+ * emitted mention triple — a concept named twice in a turn counts once).
+ * On an icelite resume the detection stage is skipped, so all three read 0.
  */
 final class RunMetrics(spark: SparkSession) extends Serializable {
   val turnsProcessed: LongAccumulator = spark.sparkContext.longAccumulator("graft.turns_processed")

@@ -99,8 +99,8 @@ class PipelineSpec extends AnyFunSuite {
     val turns = tr.withColumn("salt", pmod(col("turn_idx"), lit(KgPipeline.SaltBuckets)))
       .repartition(col("conv_id"), col("salt"))
       .sortWithinPartitions(col("conv_id"), col("turn_idx")).drop("salt")
-    ic2.materialize(spark, "mentions_top", "r1/mentions")(
-      MentionDetector.detectTopSlim(MentionDetector.slim(turns), ctx.grounder).toDF())
+    ic2.materialize(spark, "mentions_top", KgPipeline.mentionsTag("r1"))(
+      MentionDetector.detectTriples(MentionDetector.slim(turns), ctx.grounder))
     assert(ic2.currentSnapshotId("mentions_top").contains(1L))
     assert(ic2.currentSnapshotId("kg_edges").isEmpty) // "crashed" before finishing
 
@@ -114,6 +114,30 @@ class PipelineSpec extends AnyFunSuite {
     val manifest = ic2.manifestJson("kg_edges", ic2.currentSnapshotId("kg_edges").get)
     assert(manifest.contains("partition_counts"))
     assert(manifest.contains("row_count"))
+  }
+
+  test("run modes: with and without an icelite root, equal kg_edges and detection metrics") {
+    import spark.implicits._
+    // planted turn names one concept twice ("hash join" + nested "join",
+    // then "slow" twice): spans and distinct concepts per turn differ
+    val planted = Seq(("planted", 0, "user", "the hash join was slow, really slow",
+      null.asInstanceOf[String], java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val tr = Transcripts.synthetic(spark, 60).unionByName(planted)
+    val ctx = KgPipeline.prepare(spark, ontPath)
+
+    val fused = KgPipeline.runPrepared(spark, tr, ctx)
+    val fusedEdges = fused.triples.collect().map(_.toSeq).toSet
+    val ic = new Icelite("target/icelite_modes_" + System.nanoTime())
+    val resumable = KgPipeline.runPrepared(spark, tr, ctx, Some(ic))
+    val icEdges = ic.readSnapshot(spark, "kg_edges").collect().map(_.toSeq).toSet
+
+    assert(fusedEdges.contains(Seq("turn:planted/0", "ex:mentions", "PATO:0000121")))
+    assert(icEdges == fusedEdges)
+    def counts(m: graft.pipeline.RunMetrics) =
+      (m.turnsProcessed.value, m.mentionsEmitted.value, m.emptyTurns.value)
+    assert(fused.metrics.turnsProcessed.value > 0)
+    assert(counts(resumable.metrics) == counts(fused.metrics))
   }
 
   test("icelite expiry: expired data gone, current + tagged snapshots survive, resume intact") {
@@ -518,15 +542,18 @@ class PipelineSpec extends AnyFunSuite {
         struct(format_string("E:%07d", col("id") * 4 + j).as("a"),
           format_string("E:%07d", col("id") * 4 + j + 1).as("b"))): _*)).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
+      // one component where UTF-16 order (picks X:😀) and Spark's UTF-8
+      // byte order (picks X:\uE000) disagree on the min CURIE
+      .unionByName(Seq(("X:\uD83D\uDE00", "X:\uE000")).toDF("a", "b"))
     val emptyNodes = spark.createDataFrame(Seq.empty[(String, Seq[String])])
       .toDF("curie", "xrefs")
 
     // distributed table path (never collects)
     val table = KgPipeline.xrefCanonicalTable(emptyNodes, None, Some(edges))
-    // driver-map path on the same edges (forced through union-find by size? —
-    // 120k < 200k limit, so this IS the driver branch)
+    // driver-map path on the same edges (120k < 200k limit, so this IS the
+    // driver branch)
     val m = KgPipeline.xrefCanonicalMap(emptyNodes, None, Some(edges))
-    assert(m.size == nGroups * 3) // every non-rep member remapped
+    assert(m.size == nGroups * 3 + 1) // every non-rep member remapped
     val tableMap = table.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(tableMap == m)
 
